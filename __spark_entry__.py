@@ -29,645 +29,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return fn(spark, SMOKE_SF_DIR)
 
 
-# The driver verifies registry queries in dict order and caps the per-round
-# CORRECTNESS run at 50 entries, so positions 1-50 are the round-12 window:
-# 4 STALE-ATTESTATION greens first (their registered function changed
-# after the commit that ADDED their attestation round's CORRECTNESS
-# file: dedup_simhash_md5_pairs, src_csv_ingest_nation,
-# src_jsonl_ingest_orders, src_orc_ingest_part; ranked by changed-line
-# volume, cap 5), then 46 never-checked names — the 4 round-11-authored
-# coverage_round14 additions hoisted to the front via EARLY_CHECK
-# (round-11 verdict task 1: inside the window, not the tail), then 42
-# in queue order. Positions 51+ are the remaining never-checked tail
-# (7 carried + the 2 round-12-authored coverage_round15 additions
-# appended below = 9 names for round 13's window) followed by
-# already-green queries, oldest-checked first.
-#
-# Rotation recipe (run at round-N start, right after CORRECTNESS_r{N-1}
-# lands): python tools/rotate_priority.py regenerates this list — re-checks
-# (latest driver row not green) first, then stale-attestation greens
-# (capped at 5), then never-checked (EARLY_CHECK hoists, then oracle-bearing
-# before rows-only, queue order preserved), then green oldest-first.
-# Rotation-tool output at rotation time: 0 re-checks, 4
-# stale-attestation, 53 never-checked oracle-bearing, 0 never-checked
-# rows-only, 521 green (oldest first); the round-12 batch authored
-# AFTER rotation raises never-checked to 55.
-#
-# REGRESSION MODE (expected from round 13 on): round 13's window opens
-# with the 9-name never-checked tail (7 carried + 2 round-12
-# additions) plus whatever the stale tier finds (the round-12
-# pair-grain jaccard swap and the ml_conformal_interval prefix-sum
-# rewrite both touched green functions' behavior-relevant code —
-# expect dedup_minhash_near_pairs and ml_conformal_interval there, the
-# former via its bit-identical-parity pin, the latter via its function
-# -body diff), then flips to oldest-green-first re-attestation —
-# the 50-slot window is NOT wasted:
-# rotate_priority.py already orders it as (a) any non-green re-checks,
-# (b) the stale-attestation tier (greens whose function body changed
-# after their attestation commit), then (c) oldest-green-first
-# re-checking. 480+ greens carry attestations up to 9 rounds old; the
-# window becomes a rolling re-attestation sweep (~12 rounds per full
-# pass at 50/round) that catches silent regressions the preflight
-# sweep's oracle can't (driver runs its own session/env). No tooling
-# change needed — keep running the same recipe each round.
-
-# The round this list was rotated FOR: tests evaluate the 50-row window
-# against CORRECTNESS files from rounds < ROTATION_ROUND only, so the test
-# stays green when this round's own CORRECTNESS file lands after close-out
-# (structural fix for the 4-rounds-red filler test — round-8 verdict task 6).
-ROTATION_ROUND = 12
-
-DRIVER_PRIORITY: list[str] = [
-    "dedup_simhash_md5_pairs",
-    "src_csv_ingest_nation",
-    "src_jsonl_ingest_orders",
-    "src_orc_ingest_part",
-    "text_bpe_token_budget_bins",
-    "sim_ivf_serving_batch",
-    "emb_int8_quantization_error",
-    "text_chunk_sliding_windows",
-    "src_schema_merge_evolution",
-    "ml_propensity_strat_att",
-    "dash_topk_rank_churn",
-    "graph_friendship_paradox",
-    "dash_price_volume_mix_decomp",
-    "ml_label_shift_bbse",
-    "privacy_membership_inference_auc",
-    "er_sorted_neighborhood_pairs",
-    "stats_capture_recapture_users",
-    "search_spell_correct_topk",
-    "win_interval_union_coverage",
-    "ts_forecast_combination_eval",
-    "layout_hilbert_vs_zorder_locality",
-    "ml_cart_depth2_gini",
-    "dash_bass_diffusion_fit",
-    "ts_cointegration_eg_test",
-    "ab_group_sequential_obf",
-    "dash_abc_xyz_matrix",
-    "stats_diff_in_diff_revenue",
-    "ml_pu_prior_elkan_noto",
-    "stats_fdr_storey_qvalues",
-    "ts_ohlc_daily",
-    "graph_threshold_cascade",
-    "ml_mrmr_feature_select",
-    "stats_fleiss_kappa_raters",
-    "agg_welford_merge_check",
-    "geo_grid_dbscan_clusters",
-    "cohort_decay_halflife",
-    "stats_eb_beta_shrinkage",
-    "stats_ratio_delta_method_se",
-    "ml_average_precision_ap",
-    "surv_rmst_restricted_mean",
-    "cdc_snapshot_share_export",
-    "agg_knee_point_kneedle",
-    "ml_c2st_stump_drift",
-    "cdc_pit_enrich_probes",
-    "cdc_ivm_agg_maintenance",
-    "cdc_tombstone_gc_audit",
-    "cdc_change_feed_between_versions",
-    "cdc_replay_inflation_audit",
-    "funnel_window_funnel_levels",
-    "emb_matryoshka_prefix_fidelity",
-    "surv_nelson_aalen_hazard",
-    "layout_file_skipping_minmax",
-    "ml_data_mixing_temperature",
-    "text_stopword_discovery_df",
-    "cep_repeat_bursts",
-    "ml_curriculum_quality_phases",
-    "emb_lsh_bucket_skew_audit",
-    "cdc_ivf_list_churn",
-    "text_bpe_fertility_oov",
-    "agg_pricing_summary",
-    "agg_rollup_region_nation",
-    "agg_cube_status_priority",
-    "agg_grouping_sets",
-    "agg_having_top_spenders",
-    "agg_median_quantile",
-    "agg_stddev_variance",
-    "cdc_snapshot",
-    "cdc_count_by_classification",
-    "cdc_new_customers_over_time",
-    "cdc_recent_customers",
-    "cdc_wire_roundtrip",
-    "cdc_snapshot_at",
-    "sort_global_orders",
-    "agg_rollup_grouping_flags",
-    "win_percent_rank_cume",
-    "fn_array_split_ops",
-    "cdc_merge_incremental",
-    "text_doc_stats",
-    "text_quality_scores",
-    "text_top_tokens",
-    "text_fingerprints",
-    "text_lang_distribution",
-    "text_redact_pii",
-    "text_char_trigrams",
-    "dedup_exact_fingerprint",
-    "dedup_distinct_doc_count",
-    "dedup_minhash_md5_signatures",
-    "dash_count_by_segment",
-    "dash_orders_per_month",
-    "dash_recent_orders",
-    "dash_events_per_hour_by_type",
-    "agg_bool_countif",
-    "fn_datediff_suite",
-    "fn_string_extras",
-    "dash_orders_per_month_dense",
-    "join_orders_customer_inner",
-    "join_customer_orders_left",
-    "join_full_outer_nations",
-    "join_broadcast_region_rollup",
-    "join_semi_active_customers",
-    "join_anti_dormant_customers",
-    "join_range_value_bands",
-    "join_asof_purchase_view",
-    "join_stream_static_enrich",
-    "agg_stats_moments",
-    "sort_global_ordinal_scalable",
-    "layout_zorder_orders",
-    "fn_unpivot_order_measures",
-    "dedup_cluster_resolution",
-    "dedup_embedding_cosine",
-    "text_chunk_documents",
-    "sim_cosine_topk",
-    "cdc_scd2_history",
-    "dash_events_sliding_2h",
-    "join_orders_customer_right",
-    "ml_split_train_eval",
-    "ml_mixture_sample",
-    "ml_pack_sequences",
-    "ml_decontaminate_eval",
-    "fn_string_suite",
-    "fn_datetime_suite",
-    "fn_math_suite",
-    "fn_json_suite",
-    "fn_conditional_suite",
-    "fn_map_suite",
-    "fn_array_suite",
-    "set_union_all_names",
-    "set_union_distinct_nationkeys",
-    "set_intersect_nationkeys",
-    "set_except_nationkeys",
-    "set_except_all_multiset",
-    "set_intersect_all_multiset",
-    "tpch_q3_shipping_priority",
-    "tpch_q5_local_supplier_volume",
-    "sim_cosine_topk_pandas",
-    "udaf_label_norm_mean",
-    "mm_decode_png_features",
-    "win_rank_orders_by_price",
-    "win_ntile_quartiles",
-    "win_lag_lead_user_events",
-    "win_running_total",
-    "win_moving_sum",
-    "win_range_frame_sum",
-    "win_latest_event_per_user",
-    "win_top3_orders_per_segment",
-    "win_value_functions",
-    "agg_listagg_nations",
-    "user_behavior_entropy",
-    "agg_pivot_status_by_segment",
-    "agg_approx_percentile_band",
-    "text_winnow_fingerprints",
-    "text_token_budget_by_source",
-    "sim_cosine_topk_lsh",
-    "sim_cosine_topk_ivf",
-    "text_heavy_hitter_tokens",
-    "text_dup_ngram_spans",
-    "text_perplexity_filter",
-    "dedup_parent_chain_depth",
-    "text_url_canonicalize",
-    "ts_user_profile_similarity",
-    "ts_anomaly_daily_values",
-    "dash_week_over_week_movers",
-    "dash_rolling_7d_active_users",
-    "dash_event_transitions",
-    "dq_assertions_orders",
-    "emb_standardize_dims",
-    "ml_cluster_safe_split",
-    "emb_quantize_int8",
-    "ml_domain_reweight",
-    "search_fuzzy_match",
-    "fn_variant_roundtrip",
-    "tpch_q6_forecast_revenue",
-    "tpch_q2_min_cost_supplier",
-    "tpch_q8_market_share",
-    "tpch_q9_product_profit",
-    "tpch_q11_important_parts",
-    "tpch_q13_customer_distribution",
-    "tpch_q15_top_supplier",
-    "tpch_q18_large_orders",
-    "tpch_q20_promotion_suppliers",
-    "tpch_q12_shipmode_priority",
-    "tpch_q14_promo_revenue",
-    "agg_decimal_money_sums",
-    "tpch_q10_returned_items",
-    "tpch_q4_order_priority",
-    "tpch_q19_bracket_revenue",
-    "tpch_q16_supplier_part_counts",
-    "tpch_q17_small_quantity_revenue",
-    "tpch_q7_nation_volume",
-    "sim_label_centroids",
-    "mm_decode_features",
-    "mm_frame_sample",
-    "udtf_sentence_stats",
-    "agg_stats_by_segment",
-    "agg_approx_count_distinct",
-    "funnel_view_purchase",
-    "cohort_weekly_retention",
-    "agg_value_histogram",
-    "cdc_kafka_wire_decode",
-    "agg_salted_event_counts",
-    "win_percent_rank_scalable",
-    "ml_stratified_sample_det",
-    "text_bigram_pmi",
-    "privacy_k_anonymity",
-    "join_null_safe_eq",
-    "text_bpe_token_counts",
-    "text_lang_id_stopword",
-    "dedup_minhash_near_pairs",
-    "dedup_simhash_signatures",
-    "text_bpe_train_merges",
-    "text_bpe_encode_compression",
-    "dedup_semantic_pairs",
-    "agg_hll_sketch_partial_merge",
-    "ml_feature_hashing",
-    "cdc_snapshot_diff",
-    "text_gopher_quality_filter",
-    "dedup_incremental_near",
-    "emb_pca_top_component",
-    "emb_random_projection",
-    "ml_weighted_sample_es",
-    "mm_decode_wav_features",
-    "ml_eval_auc_prf",
-    "ml_eval_calibration_bins",
-    "dash_sliding_distinct_hll",
-    "text_pipeline_e2e",
-    "join_lateral_top2_orders",
-    "fn_try_suite",
-    "dash_top_event_paths",
-    "agg_regr_value_by_hour",
-    "agg_bitwise_flags",
-    "ts_gapfill_locf",
-    "dash_value_percentiles_daily",
-    "join_range_binned_scale",
-    "dedup_incremental_batch",
-    "profile_orders_columns",
-    "text_repetition_ratio",
-    "dedup_jaccard_threshold_pairs",
-    "dedup_containment_pairs",
-    "search_bm25_ranking",
-    "text_tfidf_top_terms",
-    "tpch_q21_waiting_suppliers",
-    "tpch_q22_global_sales_opportunity",
-    "text_bpe_train_merges_batched",
-    "cep_purchase_within_hour",
-    "agg_count_min_probe",
-    "agg_equidepth_histogram",
-    "graph_pagerank_suppliers",
-    "ml_score_logreg",
-    "basket_copurchase_pairs",
-    "sim_sparse_tfidf_pairs",
-    "ts_outliers_mad",
-    "cep_regex_journey_patterns",
-    "ts_cusum_drift",
-    "ab_test_conversion",
-    "agg_corr_matrix_lineitem",
-    "prep_winsorize_values",
-    "agg_equidepth_histogram_scalable",
-    "stats_ks_two_sample",
-    "stats_chi_square_independence",
-    "stats_benford_first_digit",
-    "agg_mode_per_group",
-    "ts_ewma_smooth",
-    "ts_autocorr_lags",
-    "ts_rolling_median_7d",
-    "win_gaps_islands_streaks",
-    "ml_kfold_assign",
-    "ml_linreg_normal_eq",
-    "ml_naive_bayes_score",
-    "text_zipf_fit",
-    "text_ttr_lexical_diversity",
-    "graph_triangle_count_trade",
-    "graph_common_neighbors",
-    "search_phrase_match",
-    "text_rake_keywords",
-    "ts_holt_linear",
-    "stats_mann_whitney_u",
-    "agg_weighted_median",
-    "ml_decision_stump",
-    "ts_seasonal_dow_profile",
-    "privacy_l_diversity",
-    "win_pareto_80_20",
-    "emb_dim_truncation_recall",
-    "ml_feature_target_corr",
-    "dq_column_entropy_profile",
-    "agg_gini_revenue_concentration",
-    "graph_k_core_trade",
-    "dedup_edit_distance_pairs",
-    "dq_referential_orphans",
-    "geo_haversine_nearest",
-    "privacy_t_closeness",
-    "ab_wilson_intervals",
-    "join_event_self_interval",
-    "fn_xml_roundtrip",
-    "graph_label_propagation",
-    "ml_target_encoding",
-    "prep_one_hot_encode",
-    "ts_decompose_residuals",
-    "ml_neyman_allocation",
-    "dash_hour_dow_heatmap",
-    "win_cumulative_distinct_users",
-    "agg_weighted_percentiles",
-    "ts_dominant_period",
-    "ml_knn_classify_ann",
-    "geo_cell_nearest",
-    "agg_bitmap_distinct_users",
-    "agg_mutual_information",
-    "dash_dau_mau_stickiness",
-    "graph_degree_histogram",
-    "stats_theil_sen_slope",
-    "stats_mann_kendall_trend",
-    "stats_spearman_by_returnflag",
-    "stats_kendall_tau_binned",
-    "stats_anova_oneway",
-    "stats_bootstrap_ci_mean",
-    "ml_psi_score_drift",
-    "ml_eval_precision_at_k",
-    "ml_reservoir_sample_det",
-    "dq_drift_early_late",
-    "dq_spc_p_chart",
-    "prep_robust_scale",
-    "funnel_attribution_first_last",
-    "er_levenshtein_blocked_pairs",
-    "search_bm25f_multifield",
-    "graph_bfs_levels",
-    "fn_regexp_suite",
-    "win_rolling_zscore_7d",
-    "agg_hhi_by_nation",
-    "agg_geo_harmonic_means",
-    "stats_runs_test",
-    "ts_resample_linear",
-    "udaf_source_stats_arrow",
-    "udf_arrow_map_doc_stats",
-    "dash_peak_concurrency",
-    "join_interval_allen_counts",
-    "stats_levene_test",
-    "stats_cohens_d_effect",
-    "stats_poisson_rate_test",
-    "graph_clustering_coefficient",
-    "graph_degree_assortativity",
-    "ml_ridge_normal_eq",
-    "ml_confusion_logreg",
-    "ml_lift_by_score_band",
-    "dash_new_vs_returning",
-    "emb_centroid_shift_drift",
-    "dq_duplicate_key_audit",
-    "agg_skew_kurtosis_moments",
-    "ml_systematic_sample",
-    "text_char_entropy_per_source",
-    "text_langid_confusion",
-    "text_heaps_law_fit",
-    "dash_session_duration_hist",
-    "dash_bounce_rate",
-    "funnel_signup_purchase_latency",
-    "agg_abc_classification",
-    "agg_lorenz_curve_points",
-    "stats_simpsons_paradox",
-    "privacy_generalization_bands",
-    "emb_cosine_to_centroid_hist",
-    "ml_learning_curve",
-    "ml_class_weights",
-    "dq_freshness_lag",
-    "agg_skyline_pareto_2d",
-    "ml_woe_binning",
-    "emb_norm_profile",
-    "dq_spc_c_chart",
-    "text_js_divergence_sources",
-    "stats_cramers_v_pairs",
-    "ts_changepoint_binary_seg",
-    "agg_theil_index_decomposition",
-    "win_interorder_gap_stats",
-    "ml_feature_drift_ks_per_dim",
-    "text_type_coverage_budget",
-    "stats_welch_t_test",
-    "dash_days_to_nth_order",
-    "graph_bipartite_ochiai_weights",
-    "ts_dow_seasonality_strength",
-    "ml_negative_sampling_table",
-    "emb_inter_intra_separability",
-    "cdc_change_data_stats",
-    "win_time_to_next_purchase",
-    "agg_histogram_log_bins",
-    "cdc_lag_percentiles",
-    "cdc_txn_snapshot_consistency",
-    "surv_kaplan_meier_monthly",
-    "ab_sprt_sequential",
-    "ml_conformal_interval",
-    "emb_pq_adc_topk",
-    "dedup_minhash_eval_sweep",
-    "stats_mcnemar_paired",
-    "stats_cohens_kappa",
-    "stats_kruskal_wallis",
-    "stats_durbin_watson",
-    "stats_breusch_pagan",
-    "stats_jarque_bera",
-    "ts_pacf_lag2",
-    "ts_bollinger_breach_rate",
-    "ts_sax_motifs",
-    "ts_hurst_rs",
-    "graph_hits_nation_trade",
-    "graph_harmonic_centrality",
-    "text_yule_k",
-    "text_burstiness_fano",
-    "text_readability_flesch",
-    "text_ngram_novelty_curve",
-    "dash_rfm_segments",
-    "dash_cohort_ltv_curve",
-    "dash_discount_elasticity",
-    "funnel_time_decay_attribution",
-    "ml_threshold_sweep_f1",
-    "ml_brier_decomposition",
-    "ml_pinball_quantile_eval",
-    "ml_shapley_revenue_split",
-    "ml_hard_negative_mining",
-    "emb_whitening_2d",
-    "search_ndcg_at_10",
-    "search_prefix_autocomplete",
-    "dq_reconcile_order_totals",
-    "dq_functional_dependencies",
-    "win_record_high_events",
-    "agg_atkinson_inequality",
-    "dash_mom_revenue_waterfall",
-    "join_nearest_price",
-    "cdc_out_of_order_fraction",
-    "stats_grubbs_max_outlier",
-    "stats_cooks_distance_top",
-    "stats_bartlett_variance",
-    "agg_price_index_fisher",
-    "ml_kfold_rmse",
-    "dq_sequence_gaps",
-    "graph_reciprocity_trade",
-    "text_sentence_dedup_rate",
-    "stats_ljung_box",
-    "ts_seasonal_naive_mase",
-    "agg_cr_concentration",
-    "join_temporal_coalesce",
-    "text_bigram_cond_entropy",
-    "emb_mean_vector_bias",
-    "graph_edge_churn_periods",
-    "ts_max_drawdown_runup",
-    "ts_cross_correlation_lead_lag",
-    "stats_anderson_darling_2s",
-    "stats_odds_ratio_ci",
-    "stats_sign_test_lag7",
-    "stats_hodges_lehmann_shift",
-    "graph_adamic_adar",
-    "sketch_kmv_set_ops",
-    "sketch_ams_f2",
-    "sketch_linear_counting",
-    "cdc_schema_evolution_merge",
-    "cdc_dlq_replay",
-    "basket_association_rules",
-    "ts_turning_points_test",
-    "ml_isotonic_calibration_pav",
-    "ml_eval_mcc_youden",
-    "ml_next_event_bigram_acc",
-    "emb_two_nn_intrinsic_dim",
-    "emb_triplet_margin_stats",
-    "search_mrr_map_eval",
-    "search_rocchio_prf",
-    "ts_croston_intermittent",
-    "stats_gumbel_block_maxima",
-    "dash_apdex_fulfillment",
-    "text_doc_cooccur_lift",
-    "graph_mst_boruvka",
-    "ml_permutation_importance_det",
-    "stats_cochran_armitage_trend",
-    "ml_survey_ratio_estimator",
-    "text_textrank_keywords",
-    "win_h_index_users",
-    "ts_variance_ratio",
-    "stats_benjamini_hochberg",
-    "stats_cochran_q_weeks",
-    "ops_littles_law_check",
-    "ml_gmm_em_1d",
-    "stats_two_prop_power",
-    "ts_spectral_entropy",
-    "dq_scd2_integrity_audit",
-    "ml_platt_scaling",
-    "stats_friedman_test",
-    "graph_modularity_regions",
-    "search_hybrid_rrf",
-    "ml_knn_classify",
-    "emb_density_core_points",
-    "emb_hubness_indegree",
-    "stats_median_ci_binomial",
-    "ml_calibration_ece",
-    "ab_srm_check",
-    "ab_cuped_adjustment",
-    "ab_equivalence_tost",
-    "stats_paired_t_user_halves",
-    "stats_moods_median_test",
-    "stats_page_trend_test",
-    "stats_jackknife_ratio_se",
-    "stats_lin_ccc",
-    "stats_deming_regression",
-    "ts_kpss_level_stat",
-    "ts_df_unit_root",
-    "ts_granger_views_purchases",
-    "ts_ses_alpha_grid",
-    "ts_sample_entropy_binned",
-    "ts_shape_features_daily",
-    "text_good_turing_mass",
-    "text_kneser_ney_bigram",
-    "text_bigram_loglik_g2",
-    "text_oov_rate_split",
-    "graph_katz_centrality",
-    "graph_rich_club",
-    "cdc_log_compaction_ratio",
-    "funnel_markov_removal_effect",
-    "ml_fisher_lda_2class",
-    "ml_uplift_by_segment",
-    "ml_confident_joint",
-    "stats_randomization_test_det",
-    "stats_meta_fixed_effect",
-    "stats_icc_oneway",
-    "stats_cronbach_alpha",
-    "win_time_decay_sum",
-    "agg_trimmed_mean",
-    "dash_nrr_monthly",
-    "dash_repeat_rate_cohort",
-    "src_csv_corrupt_recovery",
-    "geo_geohash_rollup",
-    "prep_quantile_binning",
-    "ml_loo_target_encode",
-    "cep_absence_timeout",
-    "privacy_dp_exponential_topk",
-    "agg_bitmap_distinct_rollup",
-    "er_token_blocking_dice",
-    "fn_bitwise_suite",
-    "agg_quartiles",
-    "win_session_windows",
-    "dedup_minhash_md5_pairs",
-    "dash_peak_concurrency_scalable",
-    "join_bloom_prefilter",
-    "privacy_dp_laplace_counts",
-    "dash_activity_days_histogram",
-    "sketch_count_sketch_probe",
-    "sketch_bloom_fpr",
-    "emb_mmr_diverse_topk",
-    "stats_qq_deciles",
-    "stats_poisson_dispersion",
-    "surv_logrank_segments",
-    "ops_partition_skew_planner",
-    "win_max_subarray_kadane",
-    "dq_md5_uniformity_ks",
-    "stats_wilcoxon_signed_rank",
-    "stats_ansari_bradley",
-    "ml_auc_delong_variance",
-    "ml_drift_wasserstein_1d",
-    "geo_point_in_rect_join",
-    "search_err_cascade",
-    "emb_procrustes_2d",
-    "ts_arch_lm_lag1",
-    "dq_spc_xmr_individuals",
-    "text_honore_sichel_richness",
-    "stats_hill_tail_index",
-    "stats_tukey_hsd",
-    "text_burrows_delta",
-    "mm_phash_hamming_pairs",
-    "stats_rayleigh_hour_uniformity",
-    "ml_counterfactual_ips_eval",
-    "ml_error_slice_audit",
-    "stats_concordance_cindex",
-    "ml_uplift_qini_curve",
-    "stats_vif_multicollinearity",
-    "stats_weibull_gap_fit",
-    "search_query_likelihood_lm",
-    "stats_tail_dependence_lambda",
-    "graph_burt_constraint",
-    "src_partitioned_write_prune",
-    "privacy_randomized_response_debias",
-    "stats_hypergeom_nation_enrichment",
-    "ml_kmeans_elbow_inertia",
-    "cdc_dedup_exactly_once_effect",
-    "dq_catalog_profile",
-    "ops_slo_burn_rate_alert",
-    "cdc_backfill_cutover_check",
-    "stats_negbin_fit_daily",
-    "ts_interrupted_series_effect",
-    "dash_markov_stationary_mix",
-]
-
-
-def _ordered():
-    registry = load_registry()
-    prio = [n for n in DRIVER_PRIORITY if n in registry]
-    rest = [n for n in registry if n not in set(prio)]
-    return [(n, registry[n]) for n in prio + rest]
-
-
 def _with_worker_imports(fn):
     """The driver runs these with ITS OWN SparkSession, possibly built
     from a cwd where this package isn't importable by name — which
@@ -689,9 +50,16 @@ def _with_worker_imports(fn):
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return {name: _with_worker_imports(q.fn) for name, q in _ordered()}
+    return {
+        name: _with_worker_imports(q.fn)
+        for name, q in load_registry().items()
+    }
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL twin for every SQL-expressible query."""
-    return {name: q.oracle for name, q in _ordered() if q.oracle is not None}
+    return {
+        name: q.oracle
+        for name, q in load_registry().items()
+        if q.oracle is not None
+    }

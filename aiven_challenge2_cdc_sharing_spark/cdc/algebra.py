@@ -55,12 +55,6 @@ def unwrap(envelopes: DataFrame) -> DataFrame:
     ).select("row.*", "__deleted", "ts_ms", "seq")
 
 
-def extract_key(unwrapped: DataFrame, key_col: str = "id") -> DataFrame:
-    """P3 — ValueToKey (terraform/main.tf:257-258): materialize the key
-    column; callers repartition by it for per-key ordered apply."""
-    return unwrapped.withColumn("__key", F.col(key_col))
-
-
 N_WIRE_PARTITIONS = 4
 
 
@@ -110,32 +104,22 @@ def to_wire(unwrapped: DataFrame, n_partitions: int = N_WIRE_PARTITIONS) -> Data
     return records.unionByName(tombstones)
 
 
+# Payload columns of the flattened wire value, in schema order: the key
+# id comes from the key struct and ``__deleted`` is folded into a flag.
+_WIRE_PAYLOAD_COLS = [
+    f.name for f in CDC_WIRE_VALUE.fields if f.name not in ("id", "__deleted")
+]
+
+
 def from_wire(wire: DataFrame) -> DataFrame:
-    """S3 — schema-on-read of the wire shape back into flattened rows.
+    """S3 — schema-on-read of the wire shape back into flattened rows:
+    the valid half of ``from_wire_quarantine``.
 
     Tombstones (value IS NULL — P4 routing, consumer_to_opensearch.py:70-77)
     become delete markers carrying only the key; the id always comes from
     the parsed key struct (fixing latent bug B).
     """
-    parsed = wire.select(
-        F.from_json("key_json", CDC_WIRE_KEY).alias("k"),
-        F.from_json("value_json", CDC_WIRE_VALUE).alias("v"),
-        F.col("value_json").isNull().alias("is_tombstone"),
-        F.col("offset"),
-    )
-    return parsed.select(
-        F.col("k.id").alias("id"),
-        F.col("v.full_name").alias("full_name"),
-        F.col("v.email").alias("email"),
-        F.col("v.phone").alias("phone"),
-        F.col("v.classification").alias("classification"),
-        F.col("v.created_at").alias("created_at"),
-        (
-            F.col("is_tombstone")
-            | F.coalesce(F.col("v.__deleted") == "true", F.lit(False))
-        ).alias("__deleted"),
-        F.col("offset"),
-    )
+    return from_wire_quarantine(wire)[0]
 
 
 def from_wire_quarantine(wire: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -163,11 +147,7 @@ def from_wire_quarantine(wire: DataFrame) -> tuple[DataFrame, DataFrame]:
     quarantined = parsed.filter(bad).select("key_json", "value_json", "offset")
     good = parsed.filter(~bad).select(
         F.col("k.id").alias("id"),
-        F.col("v.full_name").alias("full_name"),
-        F.col("v.email").alias("email"),
-        F.col("v.phone").alias("phone"),
-        F.col("v.classification").alias("classification"),
-        F.col("v.created_at").alias("created_at"),
+        *[F.col(f"v.{c}").alias(c) for c in _WIRE_PAYLOAD_COLS],
         (
             F.col("is_tombstone")
             | F.coalesce(F.col("v.__deleted") == "true", F.lit(False))
@@ -175,15 +155,6 @@ def from_wire_quarantine(wire: DataFrame) -> tuple[DataFrame, DataFrame]:
         F.col("offset"),
     )
     return good, quarantined
-
-
-def route_ops(unwrapped: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """P6 — op-type dispatch (consumer_to_opensearch.py:70-96): split into
-    (upserts, deletes).  Set-oriented: both halves are lazy filters over
-    the same scan, no driver-side loop."""
-    upserts = unwrapped.filter(~F.col("__deleted"))
-    deletes = unwrapped.filter(F.col("__deleted"))
-    return upserts, deletes
 
 
 def check_constraints(rows: DataFrame) -> tuple[DataFrame, DataFrame]:

@@ -25,11 +25,6 @@ def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in explain_str(df) or "BroadcastNestedLoopJoin" in explain_str(df)
 
 
-def has_shuffle_join(df: DataFrame) -> bool:
-    s = explain_str(df)
-    return "SortMergeJoin" in s or "ShuffledHashJoin" in s
-
-
 def has_pushed_filters(df: DataFrame, *fragments: str) -> bool:
     """True if the scan's PushedFilters contains every fragment."""
     s = explain_str(df)

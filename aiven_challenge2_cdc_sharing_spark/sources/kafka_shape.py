@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..schemas import CDC_WIRE_KEY, CDC_WIRE_VALUE
+from ..cdc.algebra import from_wire
 
 
 def kafka_stream_reader(
@@ -47,25 +47,15 @@ def decode_kafka_records(records: DataFrame) -> DataFrame:
 
     Input columns (the Kafka source contract): ``key: binary``,
     ``value: binary`` (null = tombstone), ``partition: int``,
-    ``offset: long``.  Output matches ``cdc.algebra.from_wire``:
-    payload columns + ``__deleted`` + ``offset`` for ordering.
+    ``offset: long``.  The bytes are cast to the JSON strings of
+    ``schemas.CDC_WIRE`` and decoded by ``cdc.algebra.from_wire``, so a
+    record with an unparseable key or payload is dropped, never turned
+    into an all-NULL row.
     """
-    parsed = records.select(
-        F.from_json(F.col("key").cast("string"), CDC_WIRE_KEY).alias("k"),
-        F.from_json(F.col("value").cast("string"), CDC_WIRE_VALUE).alias("v"),
-        F.col("value").isNull().alias("is_tombstone"),
-        F.col("offset"),
-    )
-    return parsed.select(
-        F.col("k.id").alias("id"),
-        F.col("v.full_name").alias("full_name"),
-        F.col("v.email").alias("email"),
-        F.col("v.phone").alias("phone"),
-        F.col("v.classification").alias("classification"),
-        F.col("v.created_at").alias("created_at"),
-        (
-            F.col("is_tombstone")
-            | F.coalesce(F.col("v.__deleted") == "true", F.lit(False))
-        ).alias("__deleted"),
-        F.col("offset"),
+    return from_wire(
+        records.select(
+            F.col("key").cast("string").alias("key_json"),
+            F.col("value").cast("string").alias("value_json"),
+            F.col("offset"),
+        )
     )

@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from .runtime import merge_snapshot_batch, read_snapshot
+from .runtime import N_SNAPSHOT_BUCKETS, merge_snapshot_batch, read_snapshot
 
 
 def _publish_atomic(
@@ -97,7 +97,6 @@ def run_shared_serving(
     envelopes: DataFrame,
     base_dir: str,
     checkpoint_path: str,
-    n_buckets: int = 16,
 ) -> StreamingQuery:
     """Start the one-pass fan-out; returns the streaming query.
 
@@ -106,7 +105,7 @@ def run_shared_serving(
 
     def fanout(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        merge_snapshot_batch(batch_df, f"{base_dir}/state", n_buckets)
+        merge_snapshot_batch(batch_df, f"{base_dir}/state", N_SNAPSHOT_BUCKETS)
         snap = read_snapshot(spark, f"{base_dir}/state").localCheckpoint(
             eager=True
         )

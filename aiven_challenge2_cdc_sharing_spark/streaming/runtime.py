@@ -91,7 +91,6 @@ def run_snapshot_maintenance(
     snapshot_path: str,
     checkpoint_path: str,
     available_now: bool = True,
-    n_buckets: int = N_SNAPSHOT_BUCKETS,
 ) -> StreamingQuery:
     """T5 — continuously maintain the current-state snapshot table:
     unwrap each micro-batch and MERGE it into the snapshot (upsert +
@@ -109,19 +108,20 @@ def run_snapshot_maintenance(
     user-facing view with ``read_snapshot``.
 
     Incremental storage: the state table is hash-partitioned into
-    ``n_buckets`` key-buckets (``__bucket=pmod(xxhash64(id), n)``) and a
+    N_SNAPSHOT_BUCKETS key-buckets (``__bucket=pmod(xxhash64(id), n)``) and a
     micro-batch rewrites ONLY the buckets its keys touch — prior state
     is read with a partition-pruned scan and the write uses dynamic
     partition overwrite, so untouched buckets' files are never opened
     or rewritten.  This approximates Delta/Iceberg MERGE file-pruning
     on stock parquet: per-batch write cost is O(touched buckets), not
-    O(table).  At 100 TB, set ``n_buckets`` so one bucket ~ one
-    executor's comfortable rewrite unit; a micro-batch with uniformly
+    O(table).  At 100 TB, size N_SNAPSHOT_BUCKETS so one bucket ~ one
+    executor's comfortable rewrite unit, before the state table exists
+    (a new count puts one key in two buckets); a micro-batch with uniformly
     random keys touches every bucket (worst case = full rewrite, same
     as round 1), but real CDC batches are small and key-local.
     """
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        merge_snapshot_batch(batch_df, snapshot_path, n_buckets)
+        merge_snapshot_batch(batch_df, snapshot_path, N_SNAPSHOT_BUCKETS)
 
     writer = (
         envelopes.writeStream.foreachBatch(merge_batch)
@@ -178,17 +178,3 @@ def peek_one(
     )
     q.awaitTermination(120)
     return spark.sql("SELECT * FROM __peek LIMIT 1").collect()
-
-
-def progress_summary(query: StreamingQuery) -> dict:
-    """T7 — liveness/lag monitoring (the heartbeat analogue,
-    terraform/main.tf:251)."""
-    p = query.lastProgress
-    if p is None:
-        return {"status": query.status, "batches": 0}
-    return {
-        "status": query.status,
-        "batchId": p.get("batchId"),
-        "numInputRows": p.get("numInputRows"),
-        "inputRowsPerSecond": p.get("inputRowsPerSecond"),
-    }

@@ -35,12 +35,3 @@ def write_once_per_batch(batch_df: DataFrame, batch_id: int, out_dir: str) -> bo
     with open(marker, "w") as f:
         f.write("ok")
     return True
-
-
-def make_exactly_once_sink(out_dir: str):
-    """foreachBatch callback with replay-skip semantics."""
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        write_once_per_batch(batch_df, batch_id, out_dir)
-
-    return sink

@@ -352,34 +352,14 @@ def main() -> None:
         # 5): BENCH_FULL.json gets overwritten by whichever run happens
         # last (builder close-out vs driver), so cross-round diffs used
         # to depend on which copy survived in the tree vs git history.
-        # The stamp is __spark_entry__.ROTATION_ROUND — the round this
-        # TREE is rotated for — read textually so bench carries no
-        # import dependency; a run after next round's CORRECTNESS file
-        # lands but before the next rotation still labels the code
-        # state it actually measured.  Fallback (entry file missing or
-        # stampless): latest CORRECTNESS round + 1, the same value by
-        # convention.
+        # The stamp is the latest CORRECTNESS round + 1: the round
+        # whose code state this run measured.
         import glob as _glob
-        import re as _re
-        stamp = None
-        try:
-            m = _re.search(
-                r"^ROTATION_ROUND = (\d+)",
-                open(os.path.join(here, "__spark_entry__.py")).read(),
-                _re.M,
-            )
-            if m:
-                stamp = int(m.group(1))
-        except OSError:
-            pass
-        if stamp is None:
-            rounds = [
-                int("".join(c for c in os.path.basename(p) if c.isdigit()))
-                for p in _glob.glob(
-                    os.path.join(here, "CORRECTNESS_r*.json")
-                )
-            ]
-            stamp = (max(rounds) if rounds else 0) + 1
+        rounds = [
+            int("".join(c for c in os.path.basename(p) if c.isdigit()))
+            for p in _glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))
+        ]
+        stamp = (max(rounds) if rounds else 0) + 1
         # The stamped artifact gets its OWN try/except (round-11
         # advice): it is the copy bench_diff and the artifact tests
         # depend on, so a failure here must not be mislabeled as a

@@ -33,9 +33,9 @@ def test_round_stamped_bench_payloads_parse():
 
 
 def test_bench_stamp_matches_rotation_round_convention():
-    """bench.py stamps N = latest CORRECTNESS round + 1 — the same
-    convention as ROTATION_ROUND, so the newest stamped payload must
-    never be from a FUTURE round relative to that."""
+    """bench.py stamps N = latest CORRECTNESS round + 1, so the newest
+    stamped payload must never be from a FUTURE round relative to
+    that."""
     rounds = [
         int("".join(c for c in os.path.basename(p) if c.isdigit()))
         for p in glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import __spark_entry__ as se
+from aiven_challenge2_cdc_sharing_spark.queries import load_registry
 
 
 def test_entry_returns_rows(spark):
@@ -17,6 +18,11 @@ def test_registry_consistency():
     oracles = se.oracle_sql()
     assert qs, "registry must not be empty"
     assert set(oracles) <= set(qs)
+    # the contract serves the registry as registered: same names, same
+    # order, and every registered oracle string verbatim
+    registry = load_registry()
+    assert list(qs) == list(registry)
+    assert oracles == {n: q.oracle for n, q in registry.items() if q.oracle}
 
 
 def test_all_queries_run_sf0001(spark, sf_dir):

@@ -4,14 +4,19 @@ overwrite good state with NULLs)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from aiven_challenge2_cdc_sharing_spark.cdc import (
+    from_wire,
     from_wire_quarantine,
     generate_envelope_log,
     latest_snapshot,
     to_wire,
     unwrap,
+)
+from aiven_challenge2_cdc_sharing_spark.sources.kafka_shape import (
+    decode_kafka_records,
 )
 
 
@@ -34,13 +39,34 @@ def _poison(spark, wire):
     return wire.unionByName(bad)
 
 
-def test_quarantine_catches_garbage_and_preserves_state(spark, sf_dir):
+def _via_quarantine(wire):
+    good, quarantined = from_wire_quarantine(wire)
+    assert quarantined.count() == 3
+    return good
+
+
+def _via_kafka(wire):
+    return decode_kafka_records(
+        wire.select(
+            F.col("key_json").cast("binary").alias("key"),
+            F.col("value_json").cast("binary").alias("value"),
+            F.col("partition"),
+            F.col("offset"),
+        )
+    )
+
+
+@pytest.mark.parametrize(
+    "decode",
+    [_via_quarantine, from_wire, _via_kafka],
+    ids=["from_wire_quarantine", "from_wire", "decode_kafka_records"],
+)
+def test_quarantine_catches_garbage_and_preserves_state(spark, sf_dir, decode):
     unwrapped = unwrap(generate_envelope_log(spark, sf_dir))
     clean_wire = to_wire(unwrapped)
     expected = latest_snapshot(unwrapped)
 
-    good, quarantined = from_wire_quarantine(_poison(spark, clean_wire))
-    assert quarantined.count() == 3
+    good = decode(_poison(spark, clean_wire))
     snap = latest_snapshot(
         good, key_cols=("id",), order_cols=("offset",)
     ).drop("offset")

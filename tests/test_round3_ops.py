@@ -310,17 +310,21 @@ def test_streaming_dedup_ingest_replay_is_noop(spark, tmpdir):
 
 def test_matmul_assignment_parity_with_hof(spark, sf_dir):
     # the BLAS fast path must agree with the JVM expression argmin
-    # (same init, same tiebreak); disagreement is possible only on
+    # (same centroids, same tiebreak); disagreement is possible only on
     # float near-ties, which the synthetic embeddings don't produce
+    from aiven_challenge2_cdc_sharing_spark.operators.similarity import (
+        _assign_nearest,
+        _assign_nearest_matmul,
+        train_ivf_centroids,
+    )
+
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    hof = semantic_dedup_pairs(
-        emb, threshold=0.30, n_clusters=8, assign_strategy="hof"
-    )
-    mm = semantic_dedup_pairs(
-        emb, threshold=0.30, n_clusters=8, assign_strategy="matmul"
-    )
-    as_set = lambda df: {(r.id_a, r.id_b, r.sim) for r in df.collect()}
+    cents = train_ivf_centroids(emb, n_lists=8).localCheckpoint()
+    as_set = lambda df: {(r.vec_id, r.cluster) for r in df.collect()}
+    hof = _assign_nearest(emb, cents, "embedding", "cluster")
+    mm = _assign_nearest_matmul(emb, cents, "embedding", "cluster")
     assert as_set(hof) == as_set(mm)
+    assert len({c for _, c in as_set(hof)}) > 1
 
 
 def test_pca_matches_numpy_eigendecomposition(spark, sf_dir):
