@@ -93,19 +93,6 @@ def apply_changes(
     )
 
 
-def merge_state(
-    state: DataFrame,
-    batch: DataFrame,
-    key_cols: Sequence[str] = ("id",),
-    order_cols: Sequence[str] = ("ts_ms", "seq"),
-) -> DataFrame:
-    """Incremental maintenance of a ``latest_state`` table: both sides
-    carry metadata (incl. tombstones), so merging is closed under
-    arbitrary batch boundaries, replay, and reordering."""
-    return latest_state(state.unionByName(batch.select(*state.columns)),
-                        key_cols, order_cols)
-
-
 def snapshot_at(
     changes: DataFrame,
     ts_ms: int,

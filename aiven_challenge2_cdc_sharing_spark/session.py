@@ -1,8 +1,9 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32
-threads, single JVM); the configs below are chosen to also be the right
-defaults on a real multi-executor cluster at 100 TB scale:
+Local-mode testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: one
+thread per CPU this process may run on, single JVM); the configs below
+are chosen to also be the right defaults on a real multi-executor
+cluster at 100 TB scale:
 
 - AQE on: runtime shuffle-partition coalescing, broadcast-join demotion/
   promotion, skew-join splitting — the knobs that matter when stats at
@@ -23,7 +24,7 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(app_name: str = "aiven_challenge2_cdc_sharing_spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     # Python WORKERS (pandas UDF / mapInPandas) import this package by
     # name when unpickling; a driver process started outside the repo
     # root (sys.path patched at runtime) would leave workers unable to

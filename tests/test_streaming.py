@@ -22,6 +22,11 @@ from aiven_challenge2_cdc_sharing_spark.streaming import (
     run_snapshot_maintenance,
     windowed_counts,
 )
+from aiven_challenge2_cdc_sharing_spark.streaming.runtime import (
+    N_SNAPSHOT_BUCKETS,
+    merge_snapshot_batch,
+    snapshot_bucket,
+)
 from aiven_challenge2_cdc_sharing_spark.tables import load_table
 
 
@@ -115,15 +120,59 @@ def test_untouched_buckets_not_rewritten(spark, sf_dir, tmpdir):
     q2.awaitTermination(300)
     after = digests()
 
-    expected_bucket = spark.sql(
-        "SELECT CAST(pmod(xxhash64(CAST(1 AS INT)), 16) AS INT) AS b"
-    ).collect()[0]["b"]
+    expected_bucket = (
+        spark.range(1)
+        .select(snapshot_bucket(F.lit(1).cast("int"), N_SNAPSHOT_BUCKETS).alias("b"))
+        .collect()[0]["b"]
+    )
     changed = {b for b in before if after.get(b) != before[b]}
     assert changed <= {expected_bucket}, f"rewrote untouched buckets: {changed}"
     # and the replayed events left the snapshot unchanged (idempotent)
     got = read_snapshot(spark, snap)
     want = latest_snapshot(unwrap(log))
     assert rows_set(got) == rows_set(want)
+
+
+def test_snapshot_layout_one_file_per_bucket(spark, sf_dir, tmpdir):
+    """Partition-aligned layout: after a multi-file drain plus one more
+    merge, each ``__bucket=b`` directory holds exactly one parquet file,
+    every row in it has ``snapshot_bucket(id) == b``, and building the
+    read view runs no Spark job (the schema comes from the sidecar, not
+    from a footer-inference job)."""
+    import glob
+    import os
+
+    events_dir = f"{tmpdir}/events"
+    log = _write_event_json(spark, sf_dir, events_dir, partitions=6)
+    snap = f"{tmpdir}/snapshot"
+    run_snapshot_maintenance(
+        envelope_file_stream(spark, events_dir), snap, f"{tmpdir}/ckpt"
+    ).awaitTermination(300)
+    merge_snapshot_batch(log.limit(50), snap, N_SNAPSHOT_BUCKETS)
+
+    bucket_dirs = glob.glob(f"{snap}/__bucket=*")
+    assert len(bucket_dirs) > 1, "need multiple buckets for this test"
+    for d in bucket_dirs:
+        files = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        assert len(files) == 1, f"{d} holds {files}"
+    misplaced = (
+        spark.read.parquet(snap)
+        .filter(snapshot_bucket(F.col("id"), N_SNAPSHOT_BUCKETS) != F.col("__bucket"))
+        .count()
+    )
+    assert misplaced == 0
+
+    sc = spark.sparkContext
+    group = "read_snapshot_builds_without_jobs"
+    sc.setJobGroup(group, group)
+    try:
+        read_snapshot(spark, snap)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert rows_set(read_snapshot(spark, snap)) == rows_set(
+        latest_snapshot(unwrap(log))
+    )
 
 
 def test_stream_crash_mid_run_recovers_from_checkpoint(spark, sf_dir, tmpdir):
